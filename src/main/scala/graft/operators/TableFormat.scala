@@ -1680,7 +1680,7 @@ object TableFormat {
     * Planning IO is list size + |overlapping commits| manifest files
     * — proportional to the probe's CHURN, not the table's file count;
     * a flat manifest pays metadata IO proportional to the TABLE per
-    * probe. Measured honestly (ManifestListProbe, PERF_r10): on local
+    * probe. Measured honestly (PERF_r10 "Two-level metadata"): on local
     * NVMe the flat scan's wall time stays trivial out to ~800k files,
     * so the two-level win at that scale is the 32×-smaller metadata
     * read (the quantity an object store bills per probe and a busy

@@ -1147,7 +1147,8 @@ class RloScan(root: String, requiredSchema: StructType,
     * at-a-time on the ColumnarBatch. Spark requires all partitions
     * of one scan to agree on the format.
     * `spark.graft.rlo.columnar.enabled=false` forces the row path
-    * (escape hatch + the ScanProbe row-vs-columnar baseline). */
+    * (escape hatch + the row-vs-columnar baseline of PERF_r14 and
+    * SqlDmlSpec). */
   private def columnarEligible: Boolean =
     RloScan.columnarEnabled() && {
       val idx = requiredSchema.fieldNames.indexOf("_partition")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiler (test scope, not shipped): runs ONE catalog query with
   * a listener that records every Spark job's wall time and call site,
@@ -17,21 +16,8 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    // untimed warmup (same as Bench) so JVM/codegen startup isn't
-    // attributed to the profiled query
-    try SparkEntry.queries("q1_agg")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    catch { case scala.util.control.NonFatal(_) => () }
+    val spark = GraftSession.getOrCreate()
+    GraftSession.warmUp(spark, sfDir)
 
     case class Job(id: Int, start: Long, var end: Long, site: String)
     val jobs = scala.collection.mutable.ArrayBuffer.empty[Job]

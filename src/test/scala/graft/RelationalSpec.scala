@@ -4,26 +4,46 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // standalone-subquery DPP (q351 and the partitioned tier rely on
-      // runtime commit pruning without a reusable broadcast) - pinned
-      // at builder time so planning never flips mid-session
-      .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // pinned to 4 cores whatever SPARK_GRAFT_* says: specs assert plan
+  // shapes and partition counts that depend on it
+  lazy val spark: SparkSession =
+    GraftSession.getOrCreate(GraftSession.knobs(cores = 4))
   val sf = "/root/testdata/sf0.001"
 }
 
 class RelationalSpec extends AnyFunSuite {
   import TestSpark._
+
+  test("the shared session carries every conf key GraftSession pins") {
+    Seq("spark.master" -> "local[4]",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly" -> "false",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.files.maxPartitionBytes" -> "134217728"
+    ).foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
+    GraftSession.conf(GraftSession.knobs(cores = 4)).foreach {
+      case (k, v) => assert(spark.conf.get(k) == v, k)
+    }
+  }
+
+  test("GraftSession's env knobs must be positive integers") {
+    val names = Seq("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE_PARTS",
+      "SPARK_GRAFT_MAXPART")
+    for (name <- names; bad <- Seq("0", "-1", "abc")) {
+      val e = intercept[IllegalArgumentException](
+        GraftSession.knobs(Map(name -> bad)))
+      assert(e.getMessage.contains(s"$name='$bad'"), e.getMessage)
+    }
+    assert(GraftSession.knobs(Map.empty[String, String]) ==
+      GraftSession.Knobs(4, 4, 134217728))
+    assert(GraftSession.knobs(Map("SPARK_GRAFT_CPUS" -> "8")) ==
+      GraftSession.Knobs(8, 8, 134217728))
+    assert(GraftSession.knobs(Map("SPARK_GRAFT_CPUS" -> "8",
+      "SPARK_GRAFT_SHUFFLE_PARTS" -> "32", "SPARK_GRAFT_MAXPART" -> "1048576")) ==
+      GraftSession.Knobs(8, 32, 1048576))
+  }
 
   test("every registered query runs, returns rows, and plans no " +
       "cartesian product at sf0.001") {
